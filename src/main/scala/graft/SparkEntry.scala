@@ -131,7 +131,7 @@ object SparkEntry {
     * don't accumulate in the tmpdir. */
   private val stagedRoots =
     java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-  private def deleteRec(f: java.io.File): Unit = {
+  private[graft] def deleteRec(f: java.io.File): Unit = {
     val kids = f.listFiles()
     if (kids != null) kids.foreach(deleteRec)
     f.delete(): Unit

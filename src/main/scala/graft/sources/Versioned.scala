@@ -2531,63 +2531,71 @@ object Versioned {
     }
   }
 
+  /** The head manifest, resolved ONCE per feed read: both
+    * [[feedSchema]] and [[logicalizeFeed]] follow it. */
+  private def feedHead(path: String): Manifest = {
+    val head = latestVersion(path)
+    require(head >= 0, s"change feed: no committed version at $path")
+    val m = readManifest(path, head)
+    if (m.schemaDdl.isEmpty)
+      sys.error(s"change feed: table at $path predates schema tracking")
+    m
+  }
+
   /** The feed's read schema — PHYSICAL table names (what the linked/
     * written feed files carry) plus the two directory-derived
     * partition columns; [[logicalizeFeed]] restores the head's
     * logical names after the scan. */
-  private def feedSchema(path: String): org.apache.spark.sql.types.StructType = {
+  private def feedSchema(m: Manifest): org.apache.spark.sql.types.StructType = {
     import org.apache.spark.sql.types._
-    val head = latestVersion(path)
-    require(head >= 0, s"change feed: no committed version at $path")
-    val m = readManifest(path, head)
-    val ddl = m.schemaDdl.getOrElse(
-      sys.error(s"change feed: table at $path predates schema tracking"))
-    StructType(physStruct(m, StructType.fromDDL(ddl)).fields ++
+    StructType(physStruct(m, StructType.fromDDL(m.schemaDdl.get)).fields ++
       Seq(StructField("cv", IntegerType), StructField("ct", StringType)))
   }
 
   /** Physical→logical rename for feed reads (head's names). */
-  private def logicalizeFeed(path: String, df: DataFrame): DataFrame = {
-    val m = readManifest(path, latestVersion(path))
-    val st = org.apache.spark.sql.types.StructType.fromDDL(
-      m.schemaDdl.get)
-    toLogical(m, st, df, extra = Seq("cv", "ct"))
-  }
+  private def logicalizeFeed(m: Manifest, df: DataFrame): DataFrame =
+    toLogical(m, org.apache.spark.sql.types.StructType.fromDDL(
+      m.schemaDdl.get), df, extra = Seq("cv", "ct"))
 
   private def renameFeedCols(df: DataFrame): DataFrame = df
     .withColumnRenamed("cv", "_commit_version")
     .withColumnRenamed("ct", "_change_type")
 
-  /** Batch read of the stored feed for versions `vFrom..vTo`
-    * (inclusive): table columns + `_commit_version` + `_change_type`.
-    * Validates every version in the range has a published feed
-    * (compactions contribute zero rows); a gap names the repair
-    * hook, a plain overwrite names the contract. Partition pruning
-    * on `cv` keeps the scan to the asked range however long the
-    * feed's history is. */
-  def readChanges(spark: SparkSession, path: String, vFrom: Int,
-      vTo: Int): DataFrame = {
-    require(vFrom >= 0 && vFrom <= vTo, s"readChanges: bad range $vFrom..$vTo")
-    (vFrom to vTo).foreach { v =>
+  /** The feed-gap contract of a batch feed read over `lo..hi`;
+    * `who` names the caller in the message. */
+  private def requireFeed(path: String, lo: Int, hi: Int,
+      who: String): Unit =
+    (lo to hi).foreach { v =>
       if (!Files.isDirectory(changeDirPath(path, v))) {
         val mode = readManifest(path, v).mode
         if (mode == "overwrite" || mode == "restore") sys.error(
-          s"readChanges: v$v at $path is a $mode commit — " +
+          s"$who: v$v at $path is a $mode commit — " +
             "no stored row changes; land replacements via merge() " +
             "(or compact() for rewrites), or backfill a key-diff " +
             "feed with repairChangeFeed(keys)")
         else sys.error(
-          s"readChanges: v$v at $path has no published feed (crash " +
+          s"$who: v$v at $path has no published feed (crash " +
             "between manifest publish and feed rename?) — run " +
             "repairChangeFeed() to backfill")
       }
     }
-    import org.apache.spark.sql.functions.col
-    renameFeedCols(logicalizeFeed(path,
-      spark.read.schema(feedSchema(path))
-        .option("basePath", changesRoot(path).toString)
-        .parquet(changesRoot(path).toString)))
-      .filter(col("_commit_version").between(vFrom, vTo))
+
+  /** Batch read of the stored feed for versions `vFrom..vTo`
+    * (inclusive): table columns + `_commit_version` + `_change_type`.
+    * Validates every version in the range has a published feed
+    * (compactions contribute zero rows); a gap names the repair
+    * hook, a plain overwrite names the contract. The read is
+    * [[readChangesPruned]] over all change types: the driver lists
+    * only `_changes/cv=<v>/ct=*` for `v` in the range, so both the
+    * listing and the scan cost O(asked range), not O(retained feed).
+    * A range spanning more than Spark's parallel-discovery threshold
+    * (`spark.sql.sources.parallelPartitionDiscovery.threshold`, 32)
+    * of `ct=` dirs still lists them in one Spark job, sized to the
+    * range. */
+  def readChanges(spark: SparkSession, path: String, vFrom: Int,
+      vTo: Int): DataFrame = {
+    require(vFrom >= 0 && vFrom <= vTo, s"readChanges: bad range $vFrom..$vTo")
+    prunedFeed(spark, path, vFrom, vTo, None, "readChanges")._1
   }
 
   /** Directory-level accounting for the pruned feed read: ct-level
@@ -2608,59 +2616,31 @@ object Versioned {
       }
     }.sum
 
-  /** [[readChanges]] with DIRECTORY pruning — the batch CDC read the
-    * SQL pushdown lands on: the feed layout `_changes/cv=N/ct=type/`
-    * IS the index, so a version-range or change-type predicate
-    * becomes a directory-list filter BEFORE any file IO. Reads only
-    * the `cv=` dirs in `vFrom..vTo` and, inside each, only the `ct=`
-    * subdirs in `ct` (None = all); "changes since version N" over a
-    * long-retained feed costs O(asked range), not O(retained feed).
-    * Gap validation matches [[readChanges]] but over the NARROWED
-    * range only (versions the caller pruned away are not read, so
-    * their gaps cannot mislead it). An over-narrowed range
-    * (vFrom > vTo) is a valid empty read. Returns
-    * (frame, ctDirsRead) — the numerator of the skipping proof. */
+  /** The DIRECTORY-pruned batch feed read behind [[readChanges]] and
+    * the SQL `<t>.changes` pushdown: the feed layout
+    * `_changes/cv=N/ct=type/` IS the index, so a version-range or
+    * change-type predicate becomes a directory-list filter BEFORE any
+    * file IO. Reads only the `cv=` dirs in `vFrom..vTo` and, inside
+    * each, only the `ct=` subdirs in `ct` (None = all); "changes
+    * since version N" over a long-retained feed costs O(asked range),
+    * not O(retained feed). Gap validation covers the NARROWED range
+    * only (versions the caller pruned away are not read, so their
+    * gaps cannot mislead it). An over-narrowed range (vFrom > vTo) is
+    * a valid empty read. Returns (frame, ctDirsRead) — the numerator
+    * of the skipping proof. */
   def readChangesPruned(spark: SparkSession, path: String, vFrom: Int,
-      vTo: Int, ct: Option[Set[String]] = None): (DataFrame, Int) = {
+      vTo: Int, ct: Option[Set[String]] = None): (DataFrame, Int) =
+    prunedFeed(spark, path, math.max(0, vFrom), vTo, ct,
+      "readChangesPruned")
+
+  private def prunedFeed(spark: SparkSession, path: String, lo: Int,
+      vTo: Int, ct: Option[Set[String]], who: String): (DataFrame, Int) = {
     import org.apache.spark.sql.functions.col
-    val lo = math.max(0, vFrom)
-    def emptyFrame(): DataFrame = {
-      val head = latestVersion(path)
-      require(head >= 0, s"change feed: no committed version at $path")
-      val m = readManifest(path, head)
-      val logical = org.apache.spark.sql.types.StructType(
-        org.apache.spark.sql.types.StructType.fromDDL(m.schemaDdl
-          .getOrElse(sys.error(
-            s"change feed: table at $path predates schema tracking")))
-          .fields.map(_.copy(nullable = true)) ++ Seq(
-          org.apache.spark.sql.types.StructField("_commit_version",
-            org.apache.spark.sql.types.IntegerType),
-          org.apache.spark.sql.types.StructField("_change_type",
-            org.apache.spark.sql.types.StringType)))
-      spark.createDataFrame(
-        java.util.Collections.emptyList[org.apache.spark.sql.Row](),
-        logical)
-    }
-    if (lo > vTo) return (emptyFrame(), 0)
-    // same loud contract as readChanges, narrowed range only
-    (lo to vTo).foreach { v =>
-      if (!Files.isDirectory(changeDirPath(path, v))) {
-        val mode = readManifest(path, v).mode
-        if (mode == "overwrite" || mode == "restore") sys.error(
-          s"readChangesPruned: v$v at $path is a $mode commit — " +
-            "no stored row changes; land replacements via merge() " +
-            "(or compact() for rewrites), or backfill a key-diff " +
-            "feed with repairChangeFeed(keys)")
-        else sys.error(
-          s"readChangesPruned: v$v at $path has no published feed " +
-            "(crash between manifest publish and feed rename?) — " +
-            "run repairChangeFeed() to backfill")
-      }
-    }
+    requireFeed(path, lo, vTo, who)
+    val m = feedHead(path)
     val ctWant = ct.map(_.map(foldName))
     val paths = (lo to vTo).flatMap { v =>
-      val d = changeDirPath(path, v)
-      val ls = Files.list(d)
+      val ls = Files.list(changeDirPath(path, v))
       try ls.iterator().asScala
         .filter(p => Files.isDirectory(p) &&
           p.getFileName.toString.startsWith("ct="))
@@ -2669,15 +2649,20 @@ object Versioned {
         .map(_.toString).toList.sorted
       finally ls.close()
     }
-    if (paths.isEmpty) return (emptyFrame(), 0)
-    val df = renameFeedCols(logicalizeFeed(path,
-      spark.read.schema(feedSchema(path))
+    // no dir to read (compactions only, or an over-narrowed range):
+    // an empty frame under the scan's schema (a file scan reads every
+    // field nullable), renamed like a scanned one
+    val scan =
+      if (paths.isEmpty) spark.createDataFrame(
+        java.util.Collections.emptyList[org.apache.spark.sql.Row](),
+        asNullable(feedSchema(m))
+          .asInstanceOf[org.apache.spark.sql.types.StructType])
+      else spark.read.schema(feedSchema(m))
         .option("basePath", changesRoot(path).toString)
-        .parquet(paths: _*)))
+        .parquet(paths: _*)
+    val df = renameFeedCols(logicalizeFeed(m, scan))
       // the directory prune is exact for cv (whole versions) and ct
       // (whole types); this residual filter only re-asserts the range
-      // so a caller passing a narrower lo than the dir list (never
-      // happens today) still reads exactly the asked rows
       .filter(col("_commit_version").between(lo, vTo))
     (df, paths.size)
   }
@@ -2693,8 +2678,9 @@ object Versioned {
     * publish by atomic rename, so a discovered dir is complete. */
   def readChangeStream(spark: SparkSession, path: String): DataFrame = {
     Files.createDirectories(changesRoot(path))
-    renameFeedCols(logicalizeFeed(path,
-      spark.readStream.schema(feedSchema(path))
+    val m = feedHead(path)
+    renameFeedCols(logicalizeFeed(m,
+      spark.readStream.schema(feedSchema(m))
         .option("basePath", changesRoot(path).toString)
         .parquet(changesRoot(path).toString)))
   }

@@ -1,13 +1,15 @@
 package graft.sources
 
 import graft.SparkSpec
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** `<table>.changes` batch pushdown ([[ChangesScanBuilder]] →
   * [[Versioned.readChangesPruned]]): `_commit_version` /
   * `_change_type` predicates must become DIRECTORY-list filters
   * (dirsRead < dirsTotal — real skipped IO, not plan shape), results
-  * must stay row-exact against the unpruned read, and the feed-gap
+  * must stay row-exact against [[WholeRootFeed]] (the unpruned
+  * whole-root read, independent of the pruned path), and the feed-gap
   * contract must hold for the NARROWED range only (a query above an
   * overwrite gap succeeds; one crossing it still fails loudly). */
 class ChangesPushdownSpec extends SparkSpec {
@@ -48,10 +50,14 @@ class ChangesPushdownSpec extends SparkSpec {
   test("_commit_version range prunes cv dirs before IO, row-exact vs the unpruned read") {
     val (_, path, cat) = freshTable()
     stage(path)
-    val want = Versioned.readChanges(spark, path, 2, 3)
+    def rows(df: DataFrame) = df
       .select("k", "_commit_version", "_change_type")
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getString(2)))
       .toSet
+    val want = rows(WholeRootFeed.read(spark, path,
+      Versioned.read(spark, path).schema, 2, 3))
+    // the Scala front door is the same pruned read
+    assert(rows(Versioned.readChanges(spark, path, 2, 3)) == want)
     val got = spark.sql(s"SELECT k, _commit_version, _change_type " +
       s"FROM $cat.t.changes WHERE _commit_version >= 2")
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getString(2)))
@@ -91,7 +97,8 @@ class ChangesPushdownSpec extends SparkSpec {
     // no filter: full read, nothing skipped, accounting says so
     assert(spark.sql(s"SELECT count(*) AS n FROM $cat.t.changes")
       .head.getLong(0) ==
-      Versioned.readChanges(spark, path, 0, 3).count())
+      WholeRootFeed.read(spark, path,
+        Versioned.read(spark, path).schema, 0, 3).count())
     val (read, total) = acct()
     assert(read == total && total >= 6)
     // over-narrowed window: valid empty read, zero dirs

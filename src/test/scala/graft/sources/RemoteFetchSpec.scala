@@ -8,12 +8,11 @@ import java.util.concurrent.atomic.AtomicInteger
 
 /** Exercises the URL→staging loader against a loopback HTTP server
   * (JDK-built-in HttpServer — no network egress) serving the
-  * reference's real lookup workbook bytes. */
+  * lookup workbook's bytes ([[XlsxFixtures]]). */
 class RemoteFetchSpec extends SparkSpec {
   import spark.implicits._
 
-  private val workbook = Files.readAllBytes(
-    Paths.get("/root/reference/test/bases_norte.xlsx"))
+  private val workbook = XlsxFixtures.bytes("bases_norte")
 
   private def withServer(handler: HttpExchange => Unit)(
       body: String => Unit): Unit = {

@@ -1,6 +1,9 @@
 package graft.sources
 
 import graft.SparkSpec
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd,
+  SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** The stored change-data feed: append commits hardlink their files
@@ -10,6 +13,7 @@ import org.apache.spark.sql.functions._
   * and the streaming reader is exactly-once across restarts. */
 class VersionedCdfSpec extends SparkSpec {
   import spark.implicits._
+  import scala.jdk.CollectionConverters._
 
   private def tmpTable(): String = java.nio.file.Files
     .createTempDirectory("graft_cdf").toString
@@ -173,6 +177,79 @@ class VersionedCdfSpec extends SparkSpec {
       .flatMap(v => feedRows(path, v, v))
     assert(appendFeeds.forall(_._5 == "insert"))
     assert(appendFeeds.map(_._1).toSet == Set(100L, 101L, 102L))
+  }
+
+  /** Spark jobs each job group starts while `body` runs; a fence job
+    * in its own group, seen ending by the listener, proves every
+    * earlier job event was delivered (the listener bus is FIFO). */
+  private def jobGroupsDuring[T](body: => T): (T, Seq[String]) = {
+    val sc = spark.sparkContext
+    val groups = new java.util.concurrent.ConcurrentHashMap[Int, String]()
+    val fenceEnded = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        groups.put(e.jobId, Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .getOrElse(""))
+      override def onJobEnd(e: SparkListenerJobEnd): Unit =
+        if (groups.get(e.jobId) == "cdf-fence") fenceEnded.countDown()
+    }
+    sc.addSparkListener(listener)
+    try {
+      val out = body
+      sc.setJobGroup("cdf-fence", "listener fence")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(fenceEnded.await(60, java.util.concurrent.TimeUnit.SECONDS),
+        "fence job end never reached the listener")
+      (out, groups.values().asScala.toSeq.filter(_ != "cdf-fence"))
+    } finally sc.removeSparkListener(listener)
+  }
+
+  private def inGroup(g: String)(body: => DataFrame): DataFrame = {
+    spark.sparkContext.setJobGroup(g, g)
+    try body finally spark.sparkContext.clearJobGroup()
+  }
+
+  test("readChanges lists only the asked versions: no Spark job while the frame is built") {
+    val path = tmpTable()
+    // 42 feed versions, past the 32 dirs above which a whole-root
+    // listing runs a Spark job; `s` puts a struct in the feed schema
+    (0 to 41).foreach(i => Versioned.commit(
+      Seq((i.toLong, s"r$i", i * 10L)).toDF("k", "name", "amt")
+        .withColumn("s", struct(col("k").as("a"))),
+      path, overwrite = false))
+    val v = 20
+    val tableSchema = Versioned.read(spark, path).schema
+    val (df, groups) = jobGroupsDuring {
+      val pruned = inGroup("cdf-build")(
+        Versioned.readChanges(spark, path, v, v + 1))
+      // the listener does catch a listing job: the whole-root read
+      // of the same range lists every cv= dir in one
+      inGroup("cdf-whole-root")(
+        WholeRootFeed.read(spark, path, tableSchema, v, v + 1))
+      pruned
+    }
+    assert(!groups.contains("cdf-build"),
+      s"building the pruned feed frame started Spark jobs: $groups")
+    assert(groups.contains("cdf-whole-root"),
+      s"the whole-root control started no listing job: $groups")
+    val files = df.inputFiles.toSeq
+    assert(files.nonEmpty)
+    assert(files.forall(f => f.contains(s"/cv=$v/") ||
+      f.contains(s"/cv=${v + 1}/")), s"read outside cv=$v..${v + 1}: $files")
+    assert(df.select("k", "_commit_version", "_change_type")
+      .as[(Long, Int, String)].collect().toSet ==
+      Set((20L, 20, "insert"), (21L, 21, "insert")))
+    // a range of compaction versions only (empty cv= dirs) is an
+    // empty frame under exactly the scanned frame's schema
+    val c1 = Versioned.compact(spark, path, targetFiles = 1)
+    val c2 = Versioned.compact(spark, path, targetFiles = 1)
+    assert(c2 == c1 + 1)
+    val empty = Versioned.readChanges(spark, path, c1, c2)
+    assert(empty.count() == 0)
+    assert(empty.schema == df.schema,
+      s"empty-range schema drifts:\n${empty.schema.treeString}\n" +
+        s"vs scanned:\n${df.schema.treeString}")
   }
 
   test("cv/ct are reserved; vacuum trims the feed with the history") {

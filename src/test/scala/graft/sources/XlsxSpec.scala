@@ -4,13 +4,13 @@ import graft.SparkSpec
 import java.nio.file.Files
 import org.apache.spark.sql.functions._
 
-/** Reads the reference repo's real test workbooks (the xlsx files
-  * under /root/reference/test) through the dependency-free OOXML
-  * reader, and round-trips the writer. */
+/** Reads workbooks shaped like the reference repo's test workbooks
+  * ([[XlsxFixtures]]: hand-written OOXML parts) through the
+  * dependency-free OOXML reader, and round-trips the writer. */
 class XlsxSpec extends SparkSpec {
   import spark.implicits._
 
-  private val refDir = "/root/reference/test"
+  private val refDir = XlsxFixtures.dir.toString
 
   test("parseSheet reads the reference's bases_norte.xlsx exactly") {
     val bytes = Files.readAllBytes(
@@ -47,7 +47,7 @@ class XlsxSpec extends SparkSpec {
 
   test("loadLatestXlsx: latestBatch → promoteHeader → appendIncremental") {
     val dir = Files.createTempDirectory("xlsxbatch")
-    // stage the real reference workbook under batch-dated names: two
+    // stage the lookup workbook under batch-dated names: two
     // files in the newest batch (dup rows dedup), one stale file
     def stage(name: String): String = {
       val t = dir.resolve(name)
@@ -107,7 +107,7 @@ class XlsxSpec extends SparkSpec {
 
   test("sheetWidth (the count-only schema pass) agrees with the full parse on every workbook") {
     // the width job must never disagree with the row job it sizes —
-    // checked on the reference's real workbooks AND a writer output
+    // checked on the hand-written workbooks AND a writer output
     val real = Seq("bases_norte.xlsx", "facturacion_total.xlsx",
       "facturacion_rips.xlsx").map(n => s"$refDir/$n")
     val written = {
